@@ -194,7 +194,6 @@ def learn_bpe(
     checkpoint_every: int = 4,
     eow: "str | None" = None,
     target_vocab: int | None = None,
-    impl: str = "auto",
     driver_local_threshold: int = 2_000_000,
 ) -> "list[tuple[int, str, str, str, int]]":
     """Learn ``n_merges`` BPE merges from the corpus. Returns the merge
@@ -204,18 +203,18 @@ def learn_bpe(
 
     The corpus-scale work — the word-frequency aggregation — is always
     distributed and happens ONCE. The merge loop then runs over the
-    word table, which is vocabulary-sized (unique words), and ``impl``
-    picks where:
+    word table, which is vocabulary-sized (unique words), and the word
+    count picks where:
 
-    - ``'driver'`` (or ``'auto'`` with ≤ ``driver_local_threshold``
-      words, the common case: even a 100 TB web corpus has ~10⁷ unique
-      normalized words): collect the (word, freq) table and run the
-      loop in memory with incrementally-maintained pair counts — zero
+    - at most ``driver_local_threshold`` words (the common case: even a
+      100 TB web corpus has ~10⁷ unique normalized words): collect the
+      (word, freq) table and run the loop in memory with
+      incrementally-maintained pair counts — zero
       Spark jobs per merge, so a 32k-vocab training run costs one
       distributed aggregation + seconds of driver CPU instead of ~2
       serialized Spark jobs per merge (~60k+ job launches of pure
       scheduler latency).
-    - ``'distributed'`` (or ``'auto'`` above the threshold): each
+    - above the threshold: each
       iteration is a vocabulary-sized pair count + ``LIMIT 1`` argmax
       (one row to the driver — the sequential decision that defines the
       algorithm) + a map-only ``replace``.
@@ -236,15 +235,10 @@ def learn_bpe(
     so learning stops once ``alphabet + merges`` reaches the target —
     the standard way tokenizer training is sized (e.g. "32k vocab").
     """
-    if impl not in ("auto", "driver", "distributed"):
-        raise ValueError(f"impl must be auto|driver|distributed, got {impl!r}")
     words = _word_table(df, text_col, eow=eow).localCheckpoint()
     n_words = words.count()
-    use_driver = impl == "driver" or (
-        impl == "auto" and n_words <= driver_local_threshold
-    )
 
-    if use_driver:
+    if n_words <= driver_local_threshold:
         word_freqs = [
             (r["word"], int(r["freq"]))
             for r in words.select("word", "freq").collect()

@@ -543,31 +543,13 @@ def hard_negatives(
 
 
 def hyperplane_buckets(
-    df: DataFrame, vec_col: str = "embedding", n_planes: int = 8, impl: str = "pandas"
+    df: DataFrame, vec_col: str = "embedding", n_planes: int = 8
 ) -> DataFrame:
     """Assign each vector an LSH bucket: bit j = sign(<v, h_j>) with ±1
     hyperplane components derived deterministically (no stored model, no
-    RNG state — reproducible across runs/executors).
-
-    ``impl='pandas'`` (default): ONE numpy matmul per Arrow batch against
-    the md5-derived ±1 plane matrix (same constants as
-    :func:`det_planes`). ``impl='sql'`` keeps the pure-Catalyst
-    xxhash64-derived expression (no Python workers), at the cost of
-    n_planes interpreted higher-order folds per row — use it where a
-    Python-free plan matters more than per-row cost."""
-    if impl == "sql":
-        dim_component = (
-            "(case when (xxhash64(concat('pl', cast({j} as string), ':', cast(i as string))) & 1) = 1 "
-            "then 1.0 else -1.0 end)"
-        )
-        bit_terms = " + ".join(
-            f"(case when aggregate(zip_with({_as_double(vec_col)}, "
-            f"transform(sequence(0, size({vec_col}) - 1), i -> {dim_component.format(j=j)}), "
-            f"(x, h) -> x * h), cast(0.0 as double), (acc, v) -> acc + v) >= 0.0 "
-            f"then shiftleft(1L, {j}) else 0L end)"
-            for j in range(n_planes)
-        )
-        return df.withColumn("bucket", F.expr(f"({bit_terms})"))
+    RNG state — reproducible across runs/executors): ONE numpy matmul per
+    Arrow batch against the md5-derived ±1 plane matrix (same constants
+    as :func:`det_planes`)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -674,7 +656,6 @@ def hyperplane_buckets_det(
     vec_col: str = "embedding",
     n_planes: int = 8,
     dim: int = 64,
-    impl: str = "sql",
 ) -> DataFrame:
     """Deterministic-constant variant of :func:`hyperplane_buckets`: plane
     components are ±1 literals from :func:`det_planes`, the projection is a
@@ -682,82 +663,22 @@ def hyperplane_buckets_det(
     the bucket ids bit-for-bit. Multiplying by ±1.0 is exact; only the
     fold order of the sum matters, and both engines fold left-to-right.
 
-    ``impl='pandas'`` evaluates the SAME fold as a vectorized Arrow
-    batch kernel: per plane, products are exact (±1.0 multiply) and the
-    accumulation runs in ascending-dimension order — each element's
-    multiply-then-add is the same rounded IEEE op sequence as the
-    interpreted ``aggregate(zip_with(...))``, so the projections (and
-    hence every bucket bit) are bit-identical. ``impl='sql'`` (default)
-    keeps the pure-Catalyst expression: the r12 settled interleaved A/B
-    at sf0.1 measured the kernel ~15% SLOWER end-to-end on ann_topk
-    (0.74 s vs 0.63 s — at this corpus size the extra Python stage's
-    latency exceeds the 512 interpreted lambda evals/row it removes), so
-    per guide §4's built-in-first rule the fold stays the default; the
-    kernel is the measured escape hatch for corpora large enough that
-    per-row interpreter cost dominates stage latency. Edge semantics
-    (both impls, test-pinned): NULL vector, any NULL element, or a
-    length ≠ ``dim`` folds to a NULL comparison on every plane →
-    bucket 0; a NaN element makes every plane's fold NaN, and Spark's
-    ``NaN >= 0.0`` is TRUE (NaN sorts above all doubles) → every bit
-    set. The kernel reproduces both: a JVM-computed ``exists(isnull)``
-    flag distinguishes true NULL elements (Arrow would conflate them
-    with NaN), and bits are ``NOT (acc < 0)`` so NaN sets the bit.
+    The fold stays in Catalyst: the r12 settled interleaved A/B at sf0.1
+    measured a vectorized Arrow kernel of the same fold ~15% slower
+    end-to-end on ann_topk (0.74 s vs 0.63 s). Edge semantics
+    (test-pinned): NULL vector, any NULL element, or a length ≠ ``dim``
+    folds to a NULL comparison on every plane → bucket 0; a NaN element
+    makes every plane's fold NaN, and Spark's ``NaN >= 0.0`` is TRUE
+    (NaN sorts above all doubles) → every bit set.
     """
     planes = det_planes(n_planes, dim)
-    if impl == "sql":
-        bit_terms = " + ".join(
-            f"(case when aggregate(zip_with({_as_double(vec_col)}, "
-            f"{_plane_array_sql(p)}, (x, h) -> x * h), cast(0.0 as double), "
-            f"(acc, v) -> acc + v) >= 0.0 then shiftleft(1L, {j}) else 0L end)"
-            for j, p in enumerate(planes)
-        )
-        return df.withColumn("bucket", F.expr(f"({bit_terms})"))
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim), ±1.0
-    npl, d = int(n_planes), int(dim)
-
-    @pandas_udf("long")
-    def bucket(vs: pd.Series, has_null: pd.Series) -> pd.Series:
-        out = np.zeros(len(vs), dtype=np.int64)
-        idx = []
-        for i in range(len(vs)):
-            v = vs.iat[i]
-            # SQL fold: a NULL vector, any NULL element (the JVM-computed
-            # has_null flag — Arrow would deliver NULL elements as NaN,
-            # which the SQL fold treats differently), or zip_with NULL
-            # padding (length mismatch) makes every plane's acc NULL ->
-            # CASE not taken -> bit 0
-            if v is None or len(v) != d or bool(has_null.iat[i]):
-                continue
-            idx.append(i)
-        if idx:
-            X = np.empty((len(idx), d), dtype=np.float64)
-            for r, i in enumerate(idx):
-                X[r] = np.asarray(vs.iat[i], dtype=np.float64)
-            acc = np.zeros((len(idx), npl), dtype=np.float64)
-            for j in range(d):
-                # ascending-dimension multiply-then-add: same rounded
-                # IEEE ops in the same order as the interpreted fold
-                acc += X[:, j : j + 1] * P[:, j][None, :]
-            # Spark's NaN >= 0.0 is TRUE (NaN sorts above all doubles):
-            # NOT (acc < 0) reproduces that; for finite acc it equals
-            # acc >= 0
-            bits = ~(acc < 0.0)
-            weights = (np.int64(1) << np.arange(npl, dtype=np.int64))
-            out[idx] = bits.astype(np.int64) @ weights
-        return pd.Series(out)
-
-    return df.withColumn(
-        "bucket",
-        bucket(
-            F.col(vec_col),
-            F.coalesce(
-                F.expr(f"exists({vec_col}, x -> isnull(x))"), F.lit(False)
-            ),
-        ),
+    bit_terms = " + ".join(
+        f"(case when aggregate(zip_with({_as_double(vec_col)}, "
+        f"{_plane_array_sql(p)}, (x, h) -> x * h), cast(0.0 as double), "
+        f"(acc, v) -> acc + v) >= 0.0 then shiftleft(1L, {j}) else 0L end)"
+        for j, p in enumerate(planes)
     )
+    return df.withColumn("bucket", F.expr(f"({bit_terms})"))
 
 
 def ann_topk_exact(
@@ -1473,28 +1394,11 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _jl_sign_case(i_expr: str, j_expr: str, term: str) -> str:
-    """Catalyst CASE expression: +term or -term by the deterministic
-    Rademacher sign for (dimension ``i_expr``, output axis ``j_expr``).
-
-    The sign is a multiplicative-hash LCG over exact BIGINT arithmetic —
-    ``((i*1000003 + j*7919 + 12345) * 2654435761) mod 2^32 < 2^31`` —
-    chosen because every engine computes it bit-identically (no float,
-    no engine-specific hash function), so a DuckDB oracle can replay the
-    projection exactly. seed < 1e8, so the product stays < 2^63."""
-    lcg = (
-        f"((cast({i_expr} as bigint) * 1000003 + cast({j_expr} as bigint) * 7919 "
-        f"+ 12345) * 2654435761) % 4294967296"
-    )
-    return f"(CASE WHEN {lcg} < 2147483648 THEN {term} ELSE -{term} END)"
-
-
 def jl_project(
     df: DataFrame,
     k: int = 16,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
-    impl: str = "pandas",
 ) -> DataFrame:
     """Project ``emb_col`` (array<float>, dim d) onto ``k`` random ±1
     Rademacher axes (Achlioptas'01 database-friendly JL transform) —
@@ -1503,66 +1407,40 @@ def jl_project(
     reduced vectors make every downstream cosine/LSH pass d/k times
     cheaper.
 
-    Spark shape: one map-only pass — ``explode(sequence(0, k-1))`` fans
-    each row into its k output coordinates and a single fold over the
-    input dimensions accumulates ±emb[i] (the sign matrix is never
-    materialized — it's a closed-form integer expression, so the operator
-    ships zero state and repartitions nothing). Scale: at 100 TB this
-    stays embarrassingly parallel; output size is k/d of the input.
+    Spark shape: one map-only pass. A vectorized Arrow batch kernel
+    computes all ``k`` coordinates of a row, then the k-vector is
+    ``posexplode``d. The sign matrix is never stored: the sign for
+    (dimension i, axis j) is a multiplicative-hash LCG over exact BIGINT
+    arithmetic — ``((i*1000003 + j*7919 + 12345) * 2654435761) mod 2^32
+    < 2^31`` means +1 — which every engine computes bit-identically (no
+    float, no engine-specific hash), so the operator ships zero state and
+    repartitions nothing. Scale: at 100 TB this stays embarrassingly
+    parallel; output size is k/d of the input. A kernel rather than an
+    interpreted ``aggregate(...)`` fold per axis: settled A/B 2.2×
+    (0.32 s vs 0.70 s at sf0.1).
 
-    Determinism: each term is an exact float→double cast, negation is
-    exact, the fold runs in ascending-i order in both engines, and the
+    Determinism: each term is an exact float→double cast, the ±1 sign
+    application is exact, the fold runs in ascending-i order, and the
     final 1/sqrt(k) is one correctly-rounded IEEE op — bit-identical to
-    the DuckDB oracle.
+    the DuckDB oracle, which replays the same fold.
 
     Returns ``(id_col, axis, v)`` — one row per output coordinate.
 
-    ``impl='pandas'`` (default; settled A/B 2.2× — 0.32 s vs 0.70 s at
-    sf0.1) computes all ``k`` folds of a row in ONE vectorized Arrow
-    batch kernel — per axis the accumulation runs in ascending-i order
-    with exact ±1 sign application (negation is exact), so every double
-    is bit-identical to the interpreted ``aggregate(...)`` fold and the
-    DuckDB oracle; the k-vector is then ``posexplode``d. The SQL form
-    pays k interpreted folds per row (k·dim interpreted lambda evals —
-    1024/row at the 16×64 default), and the explode-then-fold shape
-    re-reads the embedding k times. ``impl='sql'`` keeps the
-    pure-Catalyst expression. Edge semantics (test-pinned): NULL vector
-    or any NULL element → k NULL coordinates (the kernel takes a
-    JVM-computed ``exists(isnull)`` flag, since Arrow conflates NULL
-    elements with NaN); a NaN element folds to NaN in the SQL form but
-    crosses Arrow as NULL from the kernel (the same documented
-    never-looser edge as the cosine kernels); an EMPTY vector returns
-    0.0 from the kernel where the SQL form's ``element_at`` raises
-    under ANSI. All three edges are unreachable for the engine's
-    embedding fixtures (oracle hash-green at both SFs).
+    Edge semantics (test-pinned): a NULL vector or any NULL element
+    gives k NULL coordinates (the kernel takes a JVM-computed
+    ``exists(isnull)`` flag, since Arrow conflates NULL elements with
+    NaN); a NaN element gives NULL coordinates, never NaN; an EMPTY
+    vector gives k coordinates of 0.0. None of the three is reachable
+    from the engine's embedding fixtures.
     """
     kk = int(k)
-    if impl == "sql":
-        fold = (
-            f"aggregate(sequence(0, size({emb_col}) - 1), cast(0.0 as double), "
-            f"(acc, i) -> acc + "
-            + _jl_sign_case("i", "axis", f"cast(element_at({emb_col}, i + 1) as double)")
-            + ")"
-        )
-        return (
-            df.select(
-                F.col(id_col),
-                F.col(emb_col),
-                F.explode(F.expr(f"sequence(0, {kk - 1})")).alias("axis"),
-            )
-            .select(
-                id_col,
-                "axis",
-                F.expr(f"{fold} / sqrt(cast({kk} as double))").alias("v"),
-            )
-        )
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     def _signs(d: int) -> "np.ndarray":
-        # the SQL LCG over exact BIGINT arithmetic, vectorized: int64 is
-        # safe for d <= ~3400 (same 2^63 product bound the SQL form
-        # documents); ±1.0 as float64 so the multiply stays exact
+        # the LCG over exact BIGINT arithmetic, vectorized: int64 is safe
+        # for d <= ~3400 (the product stays < 2^63); ±1.0 as float64 so
+        # the multiply stays exact
         i = np.arange(d, dtype=np.int64)[:, None]
         j = np.arange(kk, dtype=np.int64)[None, :]
         h = ((i * 1000003 + j * 7919 + 12345) * 2654435761) % 4294967296
@@ -1575,10 +1453,9 @@ def jl_project(
         for i in range(len(vs)):
             v = vs.iat[i]
             if v is None or bool(has_null.iat[i]):
-                # SQL: size(NULL) -> NULL sequence -> NULL fold, and a
-                # NULL ELEMENT -> NULL acc (the JVM-computed has_null
-                # flag — Arrow delivers NULL elements as NaN, but the
-                # SQL fold yields NULL, not NaN, for them) -> k NULLs
+                # a NULL vector or a NULL ELEMENT -> k NULLs (the
+                # JVM-computed has_null flag: Arrow delivers NULL
+                # elements as NaN)
                 out[i] = [None] * kk
                 continue
             groups.setdefault(len(v), []).append(i)
@@ -1590,14 +1467,14 @@ def jl_project(
             acc = np.zeros((len(idx), kk), dtype=np.float64)
             for t in range(d):
                 # ascending-i sign-then-add: the same rounded IEEE ops in
-                # the same order as the interpreted fold
+                # the same order as the oracle's fold
                 acc += X[:, t : t + 1] * S[t, :][None, :]
             vout = acc / np.sqrt(np.float64(kk))
             for r, i in enumerate(idx):
                 # a NaN ELEMENT folds to NaN, which crosses Arrow as
-                # NULL (same documented edge as the cosine kernels:
-                # never looser — downstream filters drop NULL like they
-                # drop nothing-compares-true NaN); made explicit here
+                # NULL (same edge as the cosine kernels: never looser —
+                # downstream filters drop NULL like they drop
+                # nothing-compares-true NaN); made explicit here
                 out[i] = [None if x != x else float(x) for x in vout[r]]
         return pd.Series(out)
 

@@ -1122,7 +1122,9 @@ def test_learn_bpe_matches_reference_impl(spark):
         for w in t.split():
             wf[w] = wf.get(w, 0) + 1
     expected = _bpe_reference(wf, n_merges=10)
-    got = bpe.learn_bpe(df, n_merges=10, min_count=2)
+    assert bpe.learn_bpe(df, n_merges=10, min_count=2) == expected
+    # driver_local_threshold=0 forces the per-merge Spark-job loop
+    got = bpe.learn_bpe(df, n_merges=10, min_count=2, driver_local_threshold=0)
     assert got == expected
 
 
@@ -1140,12 +1142,14 @@ def test_learn_bpe_driver_matches_distributed(spark):
         "doc_id long, text string",
     )
     for eow in (None, "\x17"):
-        drv = bpe.learn_bpe(df, n_merges=12, min_count=2, eow=eow, impl="driver")
-        dist = bpe.learn_bpe(df, n_merges=12, min_count=2, eow=eow, impl="distributed")
+        drv = bpe.learn_bpe(df, n_merges=12, min_count=2, eow=eow)
+        dist = bpe.learn_bpe(
+            df, n_merges=12, min_count=2, eow=eow, driver_local_threshold=0
+        )
         assert drv == dist and len(drv) > 3
     # target_vocab budgeting agrees too
-    assert bpe.learn_bpe(df, n_merges=10, target_vocab=16, impl="driver") == (
-        bpe.learn_bpe(df, n_merges=10, target_vocab=16, impl="distributed")
+    assert bpe.learn_bpe(df, n_merges=10, target_vocab=16) == (
+        bpe.learn_bpe(df, n_merges=10, target_vocab=16, driver_local_threshold=0)
     )
 
 

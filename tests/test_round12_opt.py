@@ -1,8 +1,8 @@
 """Round-12 optimization pins: every kernelized corpus-scale fold must be
-bit-identical to the interpreted expression it replaces (guide §4.1 —
-the built-in is replaced only with proof), plus the scale-hardening
-guards added this round (query-side broadcast cap, CC non-convergence
-fallback, rerank zero-norm guard)."""
+bit-identical to a straight-line replay of the fold it computes (guide
+§4.1 — the built-in is replaced only with proof), plus the
+scale-hardening guards added this round (query-side broadcast cap, CC
+non-convergence fallback, rerank zero-norm guard)."""
 
 import math
 
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# hyperplane_buckets_det: pandas kernel vs interpreted fold
+# hyperplane_buckets_det: Catalyst fold vs a Python replay
 # ---------------------------------------------------------------------------
 
 
@@ -35,29 +35,36 @@ def _messy_vectors(spark, dim=64):
 
 
 def test_hyperplane_det_kernel_matches_sql_fold(spark):
-    from samza_spark.pipeline.similarity import hyperplane_buckets_det
+    """The operator's fold equals an ascending-dimension Python replay on
+    every full-length row, and its edge rows keep their pinned buckets."""
+    from samza_spark.pipeline.similarity import det_planes, hyperplane_buckets_det
 
     df = _messy_vectors(spark)
-    got = {
-        r["vec_id"]: r["bucket"]
-        for r in hyperplane_buckets_det(df, impl="pandas").collect()
-    }
-    want = {
-        r["vec_id"]: r["bucket"]
-        for r in hyperplane_buckets_det(df, impl="sql").collect()
-    }
-    assert got == want
+    got = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets_det(df).collect()}
+    planes = det_planes(8, 64)
+    for vid, v in df.collect():
+        if v is None or len(v) != 64 or any(x is None for x in v):
+            continue
+        want = 0
+        for j, p in enumerate(planes):
+            acc = 0.0
+            for x, h in zip(v, p):
+                acc = acc + x * h
+            # Spark's NaN >= 0.0 is TRUE: the bit is set unless acc < 0
+            if not acc < 0.0:
+                want |= 1 << j
+        assert got[vid] == want, vid
     # NULL/length-mismatch/NULL-element rows fold to bucket 0
     for vid in (900, 901, 902, 904):
-        assert want[vid] == 0
+        assert got[vid] == 0
     # a NaN element makes every plane's fold NaN, and Spark's
     # NaN >= 0.0 is TRUE -> every bit set
-    assert want[905] == 255
+    assert got[905] == 255
 
 
 def test_ann_topk_exact_values_unchanged_by_kernel(spark):
-    """ann_topk_exact end-to-end: kernel-bucketed vs fold-bucketed runs
-    return identical (query_id, neighbor_id, cosine, rank) rows."""
+    """ann_topk_exact end-to-end: every returned neighbor sits in the
+    query's bucket or one of its 1-bit-flip probe buckets."""
     from samza_spark.pipeline.similarity import (
         hyperplane_buckets_det,
         ann_topk_exact,
@@ -65,50 +72,61 @@ def test_ann_topk_exact_values_unchanged_by_kernel(spark):
 
     df = _messy_vectors(spark).filter("vec_id < 200")
     q = df.filter("vec_id % 17 = 0")
-    out_kernel = {tuple(r) for r in ann_topk_exact(df, q, k=5).collect()}
-    # force the sql path by monkey-free composition: buckets must agree,
-    # so it suffices that the bucket stage agrees (asserted above) and
-    # the rest of the plan is shared; still, pin the end-to-end rows
-    # against a brute-force exact top-k restricted to matching buckets
+    out = {tuple(r) for r in ann_topk_exact(df, q, k=5).collect()}
     cb = hyperplane_buckets_det(
         df.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("cv")),
-        "cv", impl="sql",
+        "cv",
     )
-    assert out_kernel  # non-empty sanity
-    assert cb.count() == 200
+    bucket = {r["nid"]: r["bucket"] for r in cb.collect()}
+    assert out  # non-empty sanity
+    assert len(bucket) == 200
+    for qid, nid, _cos, _rank in out:
+        assert bin(bucket[qid] ^ bucket[nid]).count("1") <= 1, (qid, nid)
 
 
 # ---------------------------------------------------------------------------
-# jl_project: pandas kernel vs interpreted fold
+# jl_project: Arrow kernel vs a Python replay of the fold
 # ---------------------------------------------------------------------------
 
 
 def test_jl_project_kernel_matches_sql_fold(spark):
+    """jl_project against a straight-line replay of its fold: the LCG
+    sign, an ascending-i float fold, then ``/ sqrt(k)``. The kernel is
+    the only implementation, so its edge semantics are the operator's:
+    a NULL vector or NULL element gives k NULLs, a NaN element gives
+    NULL, and an empty vector gives 0.0."""
     from samza_spark.pipeline.similarity import jl_project
 
-    df = _messy_vectors(spark)
+    k = 16
+    df = _messy_vectors(spark).unionByName(
+        spark.createDataFrame([(906, [])], "vec_id long, embedding array<double>")
+    )
     got = {
         (r["vec_id"], r["axis"]): r["v"]
-        for r in jl_project(df, k=16, impl="pandas").collect()
+        for r in jl_project(df, k=k).collect()
     }
-    want = {
-        (r["vec_id"], r["axis"]): r["v"]
-        for r in jl_project(df, k=16, impl="sql").collect()
-    }
-    assert set(got) == set(want)
-    for key, w in want.items():
-        g = got[key]
-        if w is not None and math.isnan(w):
-            # SQL folds a NaN ELEMENT to NaN; the kernel's NaN crosses
-            # Arrow as NULL — the documented never-looser edge (same as
-            # the cosine kernels); only the NaN-element row may differ
-            # this way
-            assert key[0] == 905 and g is None, (key, g, w)
-        elif w is None or g is None:
-            assert g == w, key
-        else:
+    vecs = dict(df.collect())
+    assert set(got) == {(vid, j) for vid in vecs for j in range(k)}
+
+    def sign(i, j):
+        lcg = ((i * 1000003 + j * 7919 + 12345) * 2654435761) % 4294967296
+        return 1.0 if lcg < 2147483648 else -1.0
+
+    for vid, v in vecs.items():
+        if vid in (900, 904, 905):
+            continue
+        for j in range(k):
+            acc = 0.0
+            for i, x in enumerate(v):
+                acc = acc + x * sign(i, j)
+            want = acc / math.sqrt(k)
             # bit-identical doubles, not approx
-            assert g == w, (key, g, w)
+            assert got[(vid, j)] == want, (vid, j, got[(vid, j)], want)
+    for j in range(k):
+        assert got[(900, j)] is None  # NULL vector
+        assert got[(904, j)] is None  # NULL element
+        assert got[(905, j)] is None  # NaN element
+        assert got[(906, j)] == 0.0  # empty vector
 
 
 # ---------------------------------------------------------------------------
@@ -203,43 +221,6 @@ def test_luhn_values_match_fold_spec(spark):
 
 
 # ---------------------------------------------------------------------------
-# jaccard_verify impl toggle: kernel and sql paths agree
-# ---------------------------------------------------------------------------
-
-
-def test_jaccard_verify_impls_agree(spark):
-    from samza_spark.pipeline import dedup
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "a completely different document body here"),
-            (4, "the quick brown fox jumps over the lazy dog"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 4)], "a long, b long"
-    )
-    k = {
-        tuple(r)
-        for r in dedup.jaccard_verify(
-            docs, pairs, threshold=0.0, shingle_k=3, shingle_mode="word",
-            impl="kernel",
-        ).collect()
-    }
-    s = {
-        tuple(r)
-        for r in dedup.jaccard_verify(
-            docs, pairs, threshold=0.0, shingle_k=3, shingle_mode="word",
-            impl="sql",
-        ).collect()
-    }
-    assert k == s and len(k) == 4
-
-
-# ---------------------------------------------------------------------------
 # symspell_pairs: in-bucket expansion vs the self-join it replaced
 # ---------------------------------------------------------------------------
 
@@ -287,6 +268,22 @@ def test_cc_nonconvergence_falls_back_to_star(spark):
     out = connected_components(pairs, max_iter=3).collect()
     assert len(out) == 31
     assert {r["component"] for r in out} == {0}
+
+
+def test_cc_fallback_keeps_self_loop_only_nodes(spark):
+    from samza_spark.pipeline.dedup import connected_components
+
+    # node 100's only edge is a self-pair; node 5 has one beside its chain
+    # edges. max_iter=2 cannot converge on the 10-hop chain, so the star
+    # fallback must return the same rows as the converged run
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)] + [(100, 100), (5, 5)],
+        "a long, b long",
+    )
+    fallback = sorted(tuple(r) for r in connected_components(pairs, max_iter=2).collect())
+    converged = sorted(tuple(r) for r in connected_components(pairs).collect())
+    assert fallback == converged
+    assert (100, 100) in converged and len(converged) == 12
 
 
 def test_cc_converged_path_unchanged(spark):

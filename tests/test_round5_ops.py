@@ -588,9 +588,22 @@ def test_ngram_novelty_hash_impl_equals_exact(spark):
         [(i, f"doc {i} shares some words with doc {i-1} sometimes") for i in range(30)],
         "doc_id long, text string",
     )
-    a = {tuple(r) for r in dedup.ngram_novelty(docs, impl="hash").collect()}
-    b = {tuple(r) for r in dedup.ngram_novelty(docs, impl="exact").collect()}
-    assert a == b
+    # expected rows in plain Python: distinct word 3-grams per doc; a
+    # gram is novel when no smaller id contains it
+    grams = {}
+    for r in docs.collect():
+        w = r["text"].lower().split()
+        grams[r["doc_id"]] = {tuple(w[i : i + 3]) for i in range(max(len(w) - 2, 1))}
+    first = {}
+    for did in sorted(grams):
+        for g in grams[did]:
+            first.setdefault(g, did)
+    want = set()
+    for did, gs in grams.items():
+        novel = sum(first[g] == did for g in gs)
+        want.add((did, len(gs), novel, novel * 1_000_000 // len(gs)))
+    got = {tuple(r) for r in dedup.ngram_novelty(docs).collect()}
+    assert got == want
 
 
 def test_multimodal_frame_dedup_end_to_end(spark):

@@ -197,22 +197,28 @@ class TestBinaryNearDup:
         assert (1, 3) not in pairs and (2, 3) not in pairs
 
     def test_md5_family_matches_pandas_impl(self, spark):
-        from samza_spark.pipeline.multimodal import binary_near_dup
+        """binary_near_dup's md5-family signatures: the simhash_pandas
+        kernel equals the Catalyst majority-vote fold (dedup.simhash) on
+        the same md5 shingle-hash column."""
+        from samza_spark.pipeline.dedup import shingle_hashes, simhash, simhash_pandas
 
         rows = [
             Row(doc_id=i, content=bytearray(f"blob {i % 4} payload".encode() * 8))
             for i in range(12)
         ]
-        df = spark.createDataFrame(rows)
-        a = sorted(
-            (r.a, r.b, r.hamming)
-            for r in binary_near_dup(df, hash_family="md5", impl="sql").collect()
+        hashed = (
+            spark.createDataFrame(rows)
+            .select("doc_id", F.hex("content").alias("__hx"))
+            .select("doc_id", shingle_hashes("__hx", family="md5").alias("__shh"))
         )
-        b = sorted(
-            (r.a, r.b, r.hamming)
-            for r in binary_near_dup(df, hash_family="md5", impl="pandas").collect()
-        )
-        assert a == b and len(a) >= 1
+        got = hashed.select(
+            "doc_id",
+            simhash_pandas("__shh").alias("k"),
+            simhash("__shh").alias("h"),
+        ).collect()
+        assert len(got) == 12
+        for r in got:
+            assert r["k"] == r["h"], (r["doc_id"], r["k"], r["h"])
 
 
 # -- token-bucket rate limiting ----------------------------------------------
