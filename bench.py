@@ -744,8 +744,9 @@ def main() -> None:
         # the ad click/impression-join benchmark shape). Throughput
         # counts BOTH consumed sides, like the reference's consumed-msgs
         # metric. 8 state partitions measured best in the r8 profile
-        # (tools/profile_ttl_join.py): state-store commitTimeMs dominates
-        # this workload and grows super-linearly with the partition count
+        # (PERF.md "Round 8 — TTL-join breakdown"): state-store
+        # commitTimeMs dominates this workload and grows super-linearly
+        # with the partition count
         # (7s task-time at 8 parts vs 86s at 16 vs 167s at 32 for the
         # same 1M-row state) — the old parts=16 setting was leaving ~3x
         # on the table (130k -> 376-394k msg/s warm).
@@ -963,12 +964,13 @@ def main() -> None:
             F.concat(F.lit("v" * 248), F.col("id").cast("string")).alias("v"),
         )
         payload = payload.localCheckpoint()  # time the store, not the generator
-        # median of `repeats` fresh-store runs: r9 profiling
-        # (tools/profile_kv_write.py) measured the FIRST durable write
-        # of a session at ~4x the settled cost (codegen/JIT + cold write
-        # path: 2.36s vs 0.49s on an idle host) — a single sample lands
-        # anywhere in that band depending on what ran before it, which
-        # is exactly the r7->r8 748k->585k "regression" (PERF.md r9).
+        # median of `repeats` fresh-store runs: r9 profiling (PERF.md
+        # "Round 9 — kv_store_write 748k→585k attributed") measured the
+        # FIRST durable write of a session at ~4x the settled cost
+        # (codegen/JIT + cold write path: 2.36s vs 0.49s on an idle
+        # host) — a single sample lands anywhere in that band depending
+        # on what ran before it, which is exactly the r7->r8 748k->585k
+        # "regression".
         kv_samples = []
         for i in range(reps_within_budget(max(repeats, 2), "kv_reps_skipped")):
             t0 = time.perf_counter()

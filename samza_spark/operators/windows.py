@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import enum
 from dataclasses import dataclass, field
-from typing import Callable, Optional, Sequence
+from typing import Optional, Sequence
 
 
 class AccumulationMode(enum.Enum):
@@ -91,8 +91,6 @@ class WindowSpec:
     late_trigger: Optional[Trigger] = None  # declared-but-never-fires in Samza
     accumulation: AccumulationMode = AccumulationMode.ACCUMULATING
     watermark: str | None = None
-    fold_init: object | None = None
-    fold_fn: Callable | None = None
 
     def set_early_trigger(self, t: Trigger) -> "WindowSpec":
         self.early_trigger = t

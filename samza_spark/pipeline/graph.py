@@ -756,14 +756,14 @@ def community_modularity(
     # pipeline (e.g. label_propagation rounds) cannot run per reference.
     # Node-scale data — the materialization is tiny next to one rerun.
     # Skip when the caller already hands us a materialized table (a
-    # cached/checkpointed input would otherwise be copied again — and a
-    # lazy plan-builder should not submit an avoidable job at call time):
-    # a LogicalRDD/InMemoryRelation leaf IS the materialization.
-    plan0 = labels._jdf.queryExecution().optimizedPlan().toString()
-    first_line = plan0.splitlines()[0] if plan0 else ""
-    if not (
-        "LogicalRDD" in first_line or "InMemoryRelation" in first_line
-    ):
+    # cached/checkpointed/local input would otherwise be copied again — and
+    # a lazy plan-builder should not submit an avoidable job at call time):
+    # a LogicalRDD/InMemoryRelation/LocalRelation leaf, under nothing but
+    # column projections, IS the materialization.
+    node = labels._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() == "Project":
+        node = node.child()
+    if node.nodeName() not in ("LogicalRDD", "InMemoryRelation", "LocalRelation"):
         labels = labels.localCheckpoint(eager=True)
     la = labels.select(F.col("node").alias("a"), F.col(label_col).alias("la"))
     lb = labels.select(F.col("node").alias("b"), F.col(label_col).alias("lb"))

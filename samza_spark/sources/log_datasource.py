@@ -63,6 +63,15 @@ _TS_INDEX = "_ts_index.json"
 # -- producer helpers (the SystemProducer analog) ---------------------------
 
 
+def _write_json(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON atomically: readers see the old
+    file or the new one, never a partial write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def _manifest_path(log_dir: str) -> str:
     return os.path.join(log_dir, _MANIFEST)
 
@@ -123,14 +132,8 @@ def append_records(
         idx.setdefault(partition, []).append(
             [start, max(int(ts) for _, _, ts in records)]
         )
-        tmp = _ts_index_path(log_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({str(k): v for k, v in idx.items()}, f)
-        os.replace(tmp, _ts_index_path(log_dir))
-    tmp = _manifest_path(log_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({str(k): v for k, v in counts.items()}, f)
-    os.replace(tmp, _manifest_path(log_dir))
+        _write_json(_ts_index_path(log_dir), {str(k): v for k, v in idx.items()})
+    _write_json(_manifest_path(log_dir), {str(k): v for k, v in counts.items()})
     return counts[partition]
 
 
@@ -331,13 +334,6 @@ def read_txn(log_dir: str) -> dict:
         return {"committed": {}, "intent": None}
 
 
-def _write_txn(log_dir: str, txn: dict) -> None:
-    tmp = _txn_path(log_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(txn, f)
-    os.replace(tmp, _txn_path(log_dir))
-
-
 def recover_log(log_dir: str) -> "dict | None":
     """Resolve a crashed append. The MANIFEST write is the single commit
     point: if the manifest already shows the intent's planned new counts,
@@ -369,12 +365,11 @@ def recover_log(log_dir: str) -> "dict | None":
             p: [b for b in blocks if b[0] < counts.get(p, 0)]
             for p, blocks in idx.items()
         }
-        tmp = _ts_index_path(log_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({str(k): v for k, v in pruned.items() if v}, f)
-        os.replace(tmp, _ts_index_path(log_dir))
+        _write_json(
+            _ts_index_path(log_dir), {str(k): v for k, v in pruned.items() if v}
+        )
     txn["intent"] = None
-    _write_txn(log_dir, txn)
+    _write_json(_txn_path(log_dir), txn)
     return intent
 
 
@@ -506,7 +501,7 @@ def log_sink(
             "sizes": sizes,
             "new_counts": new_counts,
         }
-        _write_txn(log_dir, txn)
+        _write_json(_txn_path(log_dir), txn)
 
         idx = read_ts_index(log_dir)
         for p, names in sorted(blocks.items()):
@@ -524,20 +519,14 @@ def log_sink(
                 counts[p] = start + appended
                 idx.setdefault(p, []).append([start, max_ts])
 
-        tmp = _ts_index_path(log_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({str(k): v for k, v in idx.items()}, f)
-        os.replace(tmp, _ts_index_path(log_dir))
+        _write_json(_ts_index_path(log_dir), {str(k): v for k, v in idx.items()})
         # COMMIT POINT: the manifest rename makes the batch visible
-        tmp = _manifest_path(log_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({str(k): v for k, v in counts.items()}, f)
-        os.replace(tmp, _manifest_path(log_dir))
+        _write_json(_manifest_path(log_dir), {str(k): v for k, v in counts.items()})
         # post-commit bookkeeping (idempotent: recover_log rolls forward
         # to exactly this state if we crash before it lands)
         txn["intent"] = None
         txn["committed"][sink_id] = batch_id
-        _write_txn(log_dir, txn)
+        _write_json(_txn_path(log_dir), txn)
         shutil.rmtree(stage_dir, ignore_errors=True)
 
     return write_batch

@@ -1,34 +1,43 @@
 """Triggered windows with accumulation modes — the custom stateful operator.
 
-Samza semantics being reproduced (/root/reference):
+Samza semantics being reproduced (Apache Samza sources):
 
 * early triggers fire panes before window close: count(n),
   timeSinceFirstMessage(d), timeSinceLastMessage(d), any(...), repeat(...)
-  — samza-api/.../operators/triggers/Triggers.java:54-106, evaluated in
-  samza-core/.../operators/impl/WindowOperatorImpl.java:253-297.
+  — samza-api/.../operators/triggers/Triggers.java:54-106, evaluated once
+  per message in samza-core/.../operators/impl/WindowOperatorImpl.java:253-297.
 * AccumulationMode.DISCARDING purges pane state on every fire;
   ACCUMULATING keeps it (WindowOperatorImpl.java:272,
   windows/AccumulationMode.java).
 * windows are assigned by event time but triggered on processing time
   (a Clock is injected — WindowOperatorImpl.java:104-113).
 
-Catalyst has no per-pane trigger analog (SURVEY.md §4.2 item 1), so this is
-implemented with ``applyInPandasWithState`` for streams and an
-``applyInPandas`` emulation for batch/replay. State per key is a dict of
-open windows, exactly Samza's TimeSeriesStore layout ``(key, windowStart)``
-(samza-core/.../operators/impl/store/TimeSeriesStoreImpl.java:79).
+Catalyst has no per-pane trigger analog (SURVEY.md §4.2 item 1), so one
+pane kernel (:class:`_PaneKernel`) holds a key's open windows, exactly
+Samza's TimeSeriesStore layout ``(key, windowStart)``
+(samza-core/.../operators/impl/store/TimeSeriesStoreImpl.java:79), and two
+operators run it: ``applyInPandasWithState`` for streams (the windows travel
+between micro-batches as JSON in Spark's state store) and ``applyInPandas``
+for batch replay (a key's rows ingested once in event-time order).
 
-Scale note: state is partitioned by key across executors (RocksDB state
-store provider), and each Arrow batch is aggregated vectorised in pandas —
-no per-row Python in the hot path. Pane output is append-mode, so the sink
-sees the same pane stream Samza's downstream operators see.
+Count triggers are exact per message: the kernel cuts a window's rows at
+count boundaries, so a ``count(n)`` pane fires at exactly the n-th message
+since the last fire however the input is split into micro-batches or Arrow
+chunks, and a stream's count panes equal the batch replay's over the same
+rows in the same order. Each slice between boundaries is aggregated
+vectorised in pandas — no per-row Python in the hot path. Pane output is
+append-mode, so the sink sees the same pane stream Samza's downstream
+operators see.
 """
 
 from __future__ import annotations
 
+import json
+import time
 from dataclasses import dataclass
 from typing import Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
@@ -84,7 +93,7 @@ def _flatten_triggers(t: Trigger | None) -> list[Trigger]:
 
 
 def _pane_agg(pdf: pd.DataFrame, aggs: Sequence[AggSpec]) -> dict:
-    """Vectorised partial aggregation of one Arrow chunk of a pane."""
+    """Vectorised partial aggregation of a slice of a pane's rows."""
     out = {}
     for a in aggs:
         if a.op == "count":
@@ -101,6 +110,9 @@ def _pane_agg(pdf: pd.DataFrame, aggs: Sequence[AggSpec]) -> dict:
 
 
 def _merge_partial(state: dict, partial: dict, aggs: Sequence[AggSpec]) -> None:
+    """Fold ``partial`` ({name: (value, n)}, a slice aggregate or another
+    pane's state) into ``state`` in place. All supported aggs merge
+    commutatively."""
     for a in aggs:
         new_v, new_n = partial[a.name]
         if a.name not in state:
@@ -118,30 +130,6 @@ def _merge_partial(state: dict, partial: dict, aggs: Sequence[AggSpec]) -> None:
             cur[1] += new_n
 
 
-def _merge_states(a: dict, b: dict, aggs: Sequence[AggSpec]) -> dict:
-    """Merge two pane states (both {name: [value, n]}) — used when session
-    windows coalesce. All supported aggs are commutative merges."""
-    out = {k: list(v) for k, v in a.items()}
-    for ag in aggs:
-        if ag.name not in b:
-            continue
-        bv, bn = b[ag.name]
-        if ag.name not in out:
-            out[ag.name] = [bv, bn]
-            continue
-        cur = out[ag.name]
-        if ag.op in ("count", "sum"):
-            cur[0] += bv
-        elif ag.op == "min":
-            cur[0] = min(cur[0], bv)
-        elif ag.op == "max":
-            cur[0] = max(cur[0], bv)
-        elif ag.op == "avg":
-            cur[0] += bv
-            cur[1] += bn
-    return out
-
-
 def _finalize(state: dict, aggs: Sequence[AggSpec]) -> dict:
     out = {}
     for a in aggs:
@@ -155,19 +143,204 @@ def _finalize(state: dict, aggs: Sequence[AggSpec]) -> dict:
     return out
 
 
-def output_schema_ddl(spec: WindowSpec, key_ddl: str, aggs: Sequence[AggSpec]) -> str:
-    agg_ddl = ", ".join(
-        f"{a.name} {'bigint' if a.op == 'count' else 'double'}" for a in aggs
-    )
-    prefix = f"{key_ddl}, " if key_ddl else ""
-    return (
-        f"{prefix}window_start timestamp, window_end timestamp, "
-        f"{agg_ddl}, pane_seq int, fire_reason string, is_final boolean"
-    )
+# ---------------------------------------------------------------------------
+# The pane kernel: one state machine for the stream and the batch replay.
+# ---------------------------------------------------------------------------
+
+
+class _PanePlan:
+    """A window spec compiled once per operator: what every kernel
+    invocation reads, plus the output columns and schema."""
+
+    def __init__(self, df: DataFrame, spec: WindowSpec, aggs: Sequence[AggSpec]):
+        triggers = _flatten_triggers(spec.early_trigger)
+        counts = [t.count for t in triggers if t.kind == "count"]
+        self.aggs = list(aggs)
+        self.key_cols = list(spec.key_cols)
+        self.ts_col = spec.ts_col
+        self.is_session = spec.window_type is WindowType.SESSION
+        self.win_ms = _duration_ms(spec.duration) if spec.duration else None
+        self.gap_ms = _duration_ms(spec.gap) if spec.gap else None
+        self.close_after_ms = self.win_ms or self.gap_ms or 60_000
+        # any(count(a), count(b)) fires at the first message satisfying
+        # either: the smaller count, since every fire resets the counter
+        self.count_n = min(counts) if counts else None
+        self.count_reason = f"count({self.count_n})"
+        self.since_first = [
+            _duration_ms(t.duration) for t in triggers if t.kind == "time_since_first"
+        ]
+        self.since_last = [
+            _duration_ms(t.duration) for t in triggers if t.kind == "time_since_last"
+        ]
+        self.discarding = spec.accumulation is AccumulationMode.DISCARDING
+        self.cols = (
+            self.key_cols
+            + ["window_start", "window_end"]
+            + [a.name for a in aggs]
+            + ["pane_seq", "fire_reason", "is_final"]
+        )
+        key_ddl = "".join(
+            f"{f.name} {f.dataType.simpleString()}, "
+            for f in df.schema.fields
+            if f.name in self.key_cols
+        )
+        agg_ddl = ", ".join(
+            f"{a.name} {'bigint' if a.op == 'count' else 'double'}" for a in aggs
+        )
+        self.out_ddl = (
+            f"{key_ddl}window_start timestamp, window_end timestamp, "
+            f"{agg_ddl}, pane_seq int, fire_reason string, is_final boolean"
+        )
+
+
+class _PaneKernel:
+    """One key's open windows and the pane rows they fire.
+
+    ``windows`` maps ``"<ws>:<we>"`` (epoch ms) to a pane: ``state``
+    ({agg: [value, n]}), ``n_since_fire``, ``seq``, ``first_ms`` /
+    ``last_ms`` (processing time of the pane's first / latest ingest) and
+    ``quiet_fired``. The dict is the stream's JSON state as is, so the
+    stream loads it, ingests each chunk, sweeps and stores it back; the
+    batch replay starts from ``{}``, ingests once and closes all."""
+
+    def __init__(self, plan: _PanePlan, key: tuple, windows: dict, now_ms: int):
+        self.plan = plan
+        self.key_vals = dict(zip(plan.key_cols, key))
+        self.windows = windows
+        self.now_ms = now_ms
+        self.rows: list[dict] = []
+
+    def _fresh(self) -> dict:
+        return {
+            "state": {},
+            "n_since_fire": 0,
+            "seq": 0,
+            "first_ms": self.now_ms,
+            "last_ms": self.now_ms,
+            "quiet_fired": False,
+        }
+
+    def _fire(self, wkey: str, st: dict, reason: str, final: bool) -> None:
+        """Emit one pane row — the only place an output row is built."""
+        ws, we = map(int, wkey.split(":"))
+        rec = dict(self.key_vals)
+        rec["window_start"] = pd.Timestamp(ws, unit="ms")
+        rec["window_end"] = pd.Timestamp(we, unit="ms")
+        rec.update(_finalize(st["state"], self.plan.aggs))
+        rec["pane_seq"] = st["seq"]
+        rec["fire_reason"] = reason
+        rec["is_final"] = final
+        self.rows.append(rec)
+        st["seq"] += 1
+        st["n_since_fire"] = 0
+        if self.plan.discarding:
+            st["state"] = {}
+
+    def ingest(self, pdf: pd.DataFrame) -> None:
+        """Assign a chunk's rows to windows by event time and fold them in,
+        keeping the chunk's row order within each window."""
+        p = self.plan
+        ts_ms = (pdf[p.ts_col].astype("int64") // 1_000_000).to_numpy()
+        if p.is_session:
+            self._ingest_session(pdf, ts_ms)
+            return
+        for ws_val, rows in pdf.groupby((ts_ms // p.win_ms) * p.win_ms):
+            ws = int(ws_val)
+            self._ingest_window(f"{ws}:{ws + p.win_ms}", rows)
+
+    def _ingest_window(self, wkey: str, rows: pd.DataFrame) -> None:
+        """Fold ``rows`` into one window, cut at count-trigger boundaries so
+        a count pane fires at exactly the n-th message."""
+        p = self.plan
+        st = self.windows.get(wkey)
+        if st is None:
+            st = self.windows[wkey] = self._fresh()
+        st["quiet_fired"] = False  # new data re-arms time triggers
+        st["last_ms"] = self.now_ms
+        lo, total = 0, len(rows)
+        while lo < total:
+            hi = total
+            if p.count_n is not None:
+                hi = min(total, lo + max(1, p.count_n - st["n_since_fire"]))
+            part = rows if hi - lo == total else rows.iloc[lo:hi]
+            _merge_partial(st["state"], _pane_agg(part, p.aggs), p.aggs)
+            st["n_since_fire"] += hi - lo
+            if p.count_n is not None and st["n_since_fire"] >= p.count_n:
+                self._fire(wkey, st, p.count_reason, False)
+            lo = hi
+
+    def _ingest_session(self, pdf: pd.DataFrame, ts_ms: np.ndarray) -> None:
+        """Sessions: split the chunk, sorted by event time, at >gap breaks,
+        then merge each run with every overlapping open session — Samza's
+        session coalescing (WindowOperatorImpl session merge) carried as
+        dynamic (start, last_event + gap) keys."""
+        gap = self.plan.gap_ms
+        order = ts_ms.argsort(kind="mergesort")
+        sorted_ts = ts_ms[order]
+        cuts = [0, *(np.flatnonzero(np.diff(sorted_ts) > gap) + 1), len(sorted_ts)]
+        for b0, b1 in zip(cuts, cuts[1:]):
+            s, e = int(sorted_ts[b0]), int(sorted_ts[b1 - 1]) + gap
+            lo, hi = s, e
+            merged = self._fresh()
+            for wkey in list(self.windows):
+                ws, we = map(int, wkey.split(":"))
+                if s <= we and ws <= e:
+                    old = self.windows.pop(wkey)
+                    if old["state"]:
+                        _merge_partial(merged["state"], old["state"], self.plan.aggs)
+                    merged["n_since_fire"] += old["n_since_fire"]
+                    merged["seq"] = max(merged["seq"], old["seq"])
+                    merged["first_ms"] = min(merged["first_ms"], old["first_ms"])
+                    lo, hi = min(lo, ws), max(hi, we)
+            self.windows[f"{lo}:{hi}"] = merged
+            self._ingest_window(f"{lo}:{hi}", pdf.iloc[order[b0:b1]])
+
+    def sweep(self) -> None:
+        """Processing-time triggers and window close at ``now_ms``.
+
+        Windows ingested in this invocation have last_ms == now_ms, so fresh
+        sessions never close early and timeSinceLastMessage never fires
+        spuriously."""
+        p, now = self.plan, self.now_ms
+        for wkey, st in list(self.windows.items()):
+            # sessions close one gap after the LAST event (arrival-clock
+            # proxy for the gap timer); fixed windows after their span
+            closing = (
+                now - st["last_ms"] >= p.gap_ms
+                if p.is_session
+                else now - st["first_ms"] >= p.close_after_ms
+            )
+            if closing:
+                if st["state"]:
+                    self._fire(wkey, st, "window_close", True)
+                del self.windows[wkey]
+            elif (
+                st["state"]
+                and not st.get("quiet_fired")
+                and (
+                    any(now - st["first_ms"] >= d for d in p.since_first)
+                    or any(now - st["last_ms"] >= d for d in p.since_last)
+                )
+            ):
+                # one fire per quiet period (Samza re-evaluates
+                # timeSinceLastMessage only as messages arrive; repeat
+                # semantics need Triggers.repeat)
+                self._fire(wkey, st, "time_trigger", False)
+                st["quiet_fired"] = True
+
+    def close_all(self) -> None:
+        """End of input: every window with pane state fires its final pane."""
+        for wkey, st in self.windows.items():
+            if st["state"]:
+                self._fire(wkey, st, "window_close", True)
+        self.windows.clear()
+
+    def frame(self) -> pd.DataFrame:
+        return pd.DataFrame(self.rows, columns=self.plan.cols)
 
 
 # ---------------------------------------------------------------------------
-# Batch emulation (replay): deterministic pane stream given event-time order.
+# Batch replay (applyInPandas) and stream (applyInPandasWithState).
 # ---------------------------------------------------------------------------
 
 
@@ -176,103 +349,21 @@ def triggered_window_batch(
     spec: WindowSpec,
     aggs: Sequence[AggSpec],
 ) -> DataFrame:
-    """Replay-mode pane computation: what the trigger machinery *would* emit
-    given rows in event-time order. Used for BATCH ApplicationMode parity
-    (ApplicationConfig.java:44-46) and as the deterministic oracle for the
-    streaming operator's tests."""
-    win_ms = _duration_ms(spec.duration) if spec.duration else None
-    gap_ms = _duration_ms(spec.gap) if spec.gap else None
-    triggers = _flatten_triggers(spec.early_trigger)
-    count_ns = [t.count for t in triggers if t.kind == "count"]
-    discarding = spec.accumulation is AccumulationMode.DISCARDING
-    key_cols = list(spec.key_cols)
-    ts_col = spec.ts_col
-    key_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in key_cols
-    )
-    out_ddl = output_schema_ddl(spec, key_ddl, aggs)
+    """Replay-mode pane computation: what the trigger machinery emits given
+    each key's rows in event-time order, followed by the close of every
+    window. Used for BATCH ApplicationMode parity
+    (ApplicationConfig.java:44-46) and as the deterministic reference for
+    the streaming operator's tests."""
+    plan = _PanePlan(df, spec, aggs)
 
-    def emit_panes(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
-        ts_ms = (pdf[ts_col].astype("int64") // 1_000_000).to_numpy()
-        if spec.window_type is WindowType.SESSION:
-            bounds = []
-            start = prev = None
-            for t in ts_ms:
-                if start is None:
-                    start = prev = t
-                elif t - prev > gap_ms:
-                    bounds.append((start, prev + gap_ms))
-                    start = prev = t
-                else:
-                    prev = t
-            if start is not None:
-                bounds.append((start, prev + gap_ms))
+    def replay(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        kernel = _PaneKernel(plan, key, {}, now_ms=0)
+        kernel.ingest(pdf.sort_values(plan.ts_col, kind="mergesort"))
+        kernel.close_all()
+        return kernel.frame()
 
-            def window_of(t):
-                for s, e in bounds:
-                    if s <= t < e:
-                        return (s, e)
-                return (bounds[-1][0], bounds[-1][1])
-
-            win_starts = [window_of(t) for t in ts_ms]
-        else:
-            win_starts = [((t // win_ms) * win_ms, (t // win_ms) * win_ms + win_ms) for t in ts_ms]
-
-        rows = []
-        open_windows: dict = {}
-        order: list = []
-        for i, (ws, we) in enumerate(win_starts):
-            wkey = (ws, we)
-            st = open_windows.setdefault(wkey, {"state": {}, "n_since_fire": 0, "seq": 0})
-            if wkey not in order:
-                order.append(wkey)
-            chunk = pdf.iloc[i : i + 1]
-            _merge_partial(st["state"], _pane_agg(chunk, aggs), aggs)
-            st["n_since_fire"] += 1
-            fire_n = next((n for n in count_ns if st["n_since_fire"] >= n), None)
-            if fire_n is not None:
-                vals = _finalize(st["state"], aggs)
-                rows.append((wkey, vals, st["seq"], f"count({fire_n})", False))
-                st["seq"] += 1
-                st["n_since_fire"] = 0
-                if discarding:
-                    st["state"] = {}
-        for wkey in order:
-            st = open_windows[wkey]
-            if st["state"]:
-                vals = _finalize(st["state"], aggs)
-                rows.append((wkey, vals, st["seq"], "window_close", True))
-
-        key_vals = {k: pdf[k].iloc[0] for k in key_cols}
-        recs = []
-        for (ws, we), vals, seq, reason, final in rows:
-            rec = dict(key_vals)
-            rec["window_start"] = pd.Timestamp(ws, unit="ms")
-            rec["window_end"] = pd.Timestamp(we, unit="ms")
-            rec.update(vals)
-            rec["pane_seq"] = seq
-            rec["fire_reason"] = reason
-            rec["is_final"] = final
-            recs.append(rec)
-        cols = (
-            key_cols
-            + ["window_start", "window_end"]
-            + [a.name for a in aggs]
-            + ["pane_seq", "fire_reason", "is_final"]
-        )
-        return pd.DataFrame(recs, columns=cols)
-
-    grouped = df.groupBy(*[F.col(k) for k in key_cols]) if key_cols else df.groupBy(F.lit(1).alias("__g"))
-    out = grouped.applyInPandas(lambda pdf: emit_panes(pdf), out_ddl)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Streaming operator: applyInPandasWithState.
-# ---------------------------------------------------------------------------
+    keys = [F.col(k) for k in plan.key_cols] or [F.lit(1).alias("__g")]
+    return df.groupBy(*keys).applyInPandas(replay, plan.out_ddl)
 
 
 def triggered_window_stream(
@@ -282,199 +373,47 @@ def triggered_window_stream(
 ) -> DataFrame:
     """Streaming pane computation with per-key state.
 
-    State layout: one dict per open window keyed by window_start —
-    Samza's TimeSeriesStore ``(key, windowStart)`` composite key
-    (TimeSeriesStoreImpl.java:79) carried in Spark's state store.
+    Each invocation loads the key's open windows from Spark's state store
+    (Samza's TimeSeriesStore ``(key, windowStart)`` composite key,
+    TimeSeriesStoreImpl.java:79), ingests every Arrow chunk in arrival
+    order, sweeps the processing-time triggers and stores the windows
+    back. Count triggers are exact per message: a ``count(n)`` pane holds
+    exactly the n messages since the previous fire, even when they span
+    micro-batches or one chunk holds several of them, so the pane stream
+    equals ``triggered_window_batch`` over the same rows in the same order.
     Time-based triggers use ProcessingTimeTimeout, matching Samza's
     injected-Clock processing-time trigger evaluation.
 
     SESSION windows keep dynamic ``(start, last_event+gap)`` state keys;
     incoming chunks are split at >gap breaks and coalesced with every
     overlapping open session (Samza's session merge), and the gap timer
-    closes a session one gap after its last event.
-
-    Granularity note: Samza evaluates count triggers per *message*
-    (RunLoop drives one envelope at a time); under micro-batching the
-    trigger condition is checked per Arrow chunk, so a count(3) pane may
-    carry more than 3 rows when a chunk overshoots the threshold. The batch
-    replay (`triggered_window_batch`) keeps exact per-message semantics and
-    is the reference for tests/oracles."""
-    import json
-    import time as _time
-
-    is_session = spec.window_type is WindowType.SESSION
-    win_ms = _duration_ms(spec.duration) if spec.duration else None
-    gap_ms = _duration_ms(spec.gap) if spec.gap else None
-    triggers = _flatten_triggers(spec.early_trigger)
-    count_ns = [t.count for t in triggers if t.kind == "count"]
-    since_first = [
-        _duration_ms(t.duration) for t in triggers if t.kind == "time_since_first"
-    ]
-    since_last = [
-        _duration_ms(t.duration) for t in triggers if t.kind == "time_since_last"
-    ]
-    discarding = spec.accumulation is AccumulationMode.DISCARDING
-    key_cols = list(spec.key_cols)
-    ts_col = spec.ts_col
-    close_after_ms = win_ms or gap_ms or 60_000
-
-    key_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in key_cols
-    )
-    out_ddl = output_schema_ddl(spec, key_ddl, aggs)
-    state_ddl = "payload string"
+    closes a session one gap after its last event."""
+    plan = _PanePlan(df, spec, aggs)
+    next_due = min([plan.close_after_ms, *plan.since_first, *plan.since_last])
 
     def fn(key, pdf_iter: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            windows = json.loads(state.get[0])
-        else:
-            windows = {}
-        now_ms = int(_time.time() * 1000)
-        out_rows = []
-
-        def fire(wkey: str, st: dict, reason: str, final: bool) -> None:
-            vals = _finalize({k: list(v) for k, v in st["state"].items()}, aggs)
-            rec = {k: v for k, v in zip(key_cols, key)}
-            ws, we = map(int, wkey.split(":"))
-            rec["window_start"] = pd.Timestamp(ws, unit="ms")
-            rec["window_end"] = pd.Timestamp(we, unit="ms")
-            rec.update(vals)
-            rec["pane_seq"] = st["seq"]
-            rec["fire_reason"] = reason
-            rec["is_final"] = final
-            out_rows.append(rec)
-            st["seq"] += 1
-            st["n_since_fire"] = 0
-            if discarding:
-                st["state"] = {}
-
-        def fresh_st():
-            return {
-                "state": {},
-                "n_since_fire": 0,
-                "seq": 0,
-                "first_ms": now_ms,
-                "last_ms": now_ms,
-                "quiet_fired": False,
-            }
-
-        def ingest(wkey: str, chunk: pd.DataFrame) -> None:
-            st = windows.setdefault(wkey, fresh_st())
-            st["quiet_fired"] = False  # new data re-arms time triggers
-            partial = _pane_agg(chunk, aggs)
-            merged = {k: list(v) for k, v in st["state"].items()}
-            _merge_partial(merged, partial, aggs)
-            st["state"] = merged
-            st["n_since_fire"] += len(chunk)
-            st["last_ms"] = now_ms
-            fire_n = next((n for n in count_ns if st["n_since_fire"] >= n), None)
-            if fire_n is not None:
-                fire(wkey, st, f"count({fire_n})", False)
-
-        def ingest_session(chunk: pd.DataFrame, ts_ms) -> None:
-            """Sessions: split the (sorted) chunk at >gap breaks, then merge
-            each mini-session with every overlapping open session — Samza's
-            session coalescing (WindowOperatorImpl session merge) carried in
-            the state store as dynamic (start, end) keys."""
-            order = ts_ms.argsort(kind="mergesort")
-            sorted_ts = ts_ms[order]
-            breaks = [0]
-            for i in range(1, len(sorted_ts)):
-                if sorted_ts[i] - sorted_ts[i - 1] > gap_ms:
-                    breaks.append(i)
-            breaks.append(len(sorted_ts))
-            for b0, b1 in zip(breaks, breaks[1:]):
-                idx = order[b0:b1]
-                mini = chunk.iloc[idx]
-                s, e = int(sorted_ts[b0]), int(sorted_ts[b1 - 1]) + gap_ms
-                overlapping = []
-                for wkey in list(windows):
-                    ws, we = map(int, wkey.split(":"))
-                    if s <= we and ws <= e:
-                        overlapping.append((wkey, ws, we))
-                new_ws = min([s] + [ws for _, ws, _ in overlapping])
-                new_we = max([e] + [we for _, _, we in overlapping])
-                merged_st = fresh_st()
-                for wkey, _, _ in overlapping:
-                    old = windows.pop(wkey)
-                    merged_st["state"] = _merge_states(merged_st["state"], old["state"], aggs)
-                    merged_st["n_since_fire"] += old["n_since_fire"]
-                    merged_st["seq"] = max(merged_st["seq"], old["seq"])
-                    merged_st["first_ms"] = min(merged_st["first_ms"], old["first_ms"])
-                windows[f"{new_ws}:{new_we}"] = merged_st
-                ingest(f"{new_ws}:{new_we}", mini)
-
-        got_data = False
+        windows = json.loads(state.get[0]) if state.exists else {}
+        kernel = _PaneKernel(plan, key, windows, int(time.time() * 1000))
         for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            got_data = True
-            ts_ms = (pdf[ts_col].astype("int64") // 1_000_000).to_numpy()
-            if is_session:
-                ingest_session(pdf, ts_ms)
-                continue
-            for ws_val, chunk in pdf.groupby((ts_ms // win_ms) * win_ms if win_ms else 0):
-                ws = int(ws_val)
-                we = ws + (win_ms or gap_ms)
-                ingest(f"{ws}:{we}", chunk)
-
-        # Close/time-trigger sweep runs on EVERY invocation, not only on
-        # timeout: each data batch resets the timeout clock, so under
-        # sustained per-key traffic a timeout-only sweep would never fire
-        # window_close and expired windows would pile up in state forever.
-        # Windows touched this batch have last_ms == now_ms, so fresh
-        # sessions never close early and last_due never fires spuriously.
-        for wkey in list(windows):
-            st = windows[wkey]
-            first_due = any(now_ms - st["first_ms"] >= d for d in since_first)
-            last_due = any(now_ms - st["last_ms"] >= d for d in since_last)
-            # sessions close one gap after the LAST event (arrival-clock
-            # proxy for the gap timer); fixed windows after their span
-            closing = (
-                now_ms - st["last_ms"] >= gap_ms
-                if is_session
-                else now_ms - st["first_ms"] >= close_after_ms
-            )
-            if closing:
-                if st["state"]:
-                    fire(wkey, st, "window_close", True)
-                del windows[wkey]
-            elif (
-                (first_due or last_due)
-                and st["state"]
-                and not st.get("quiet_fired")
-            ):
-                # one fire per quiet period (Samza re-evaluates
-                # timeSinceLastMessage only as messages arrive; repeat
-                # semantics need Triggers.repeat)
-                fire(wkey, st, "time_trigger", False)
-                st["quiet_fired"] = True
-
+            if not pdf.empty:
+                kernel.ingest(pdf)
+        # The sweep runs on EVERY invocation, not only on timeout: each data
+        # batch resets the timeout clock, so under sustained per-key traffic
+        # a timeout-only sweep would never fire window_close and expired
+        # windows would pile up in state forever.
+        kernel.sweep()
         if windows:
             state.update((json.dumps(windows),))
-            next_due = min(
-                [close_after_ms]
-                + [d for d in since_first]
-                + [d for d in since_last]
-            )
-            state.setTimeoutDuration(int(next_due))
+            state.setTimeoutDuration(next_due)
         elif state.exists:
             state.remove()
-
-        cols = (
-            key_cols
-            + ["window_start", "window_end"]
-            + [a.name for a in aggs]
-            + ["pane_seq", "fire_reason", "is_final"]
-        )
-        yield pd.DataFrame(out_rows, columns=cols)
+        yield kernel.frame()
 
     return (
-        df.groupBy(*[F.col(k) for k in key_cols])
+        df.groupBy(*[F.col(k) for k in plan.key_cols])
         .applyInPandasWithState(
-            fn, out_ddl, state_ddl, "append", GroupStateTimeout.ProcessingTimeTimeout
+            fn, plan.out_ddl, "payload string", "append",
+            GroupStateTimeout.ProcessingTimeTimeout,
         )
     )
 
@@ -488,15 +427,13 @@ def await_condition(query, condition, timeout_s: float = 60.0, poll_s: float = 0
     (timer-evaluation batches are scheduled indefinitely), so the engine
     never signals ``noNewData`` and processAllAvailable blocks forever.
     Returns True if the condition was met; raises if the query failed."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_s
-    while _time.monotonic() < deadline:
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline:
         if query.exception() is not None:
             raise query.exception()
         if condition():
             return True
-        _time.sleep(poll_s)
+        time.sleep(poll_s)
     return bool(condition())
 
 

@@ -77,9 +77,13 @@ class TestRunner:
     def _sink_view(self, name: str) -> str:
         return f"{self._scope}_{name}"
 
-    def run(self, spark: SparkSession, timeout_s: float | None = 60.0) -> "TestRunner":
-        """Build the in-memory IO, invoke the app, drain any streaming
-        queries it returns/starts (bounded by ``timeout_s``)."""
+    def run(self, spark: SparkSession) -> "TestRunner":
+        """Build the in-memory IO, invoke the app, and drain any streaming
+        queries it returns/starts with ``processAllAvailable``, which has no
+        time bound. That drain never returns for a query with a
+        ``ProcessingTimeTimeout`` operator (triggered windows), so test such
+        queries with
+        :func:`samza_spark.streaming.stateful.await_condition` instead."""
         self._spark = spark
         streams = {n: src.read(spark) for n, src in self._inputs.items()}
         self._sinks = {

@@ -68,10 +68,10 @@ def test_label_propagation_n3_returns_materialized(spark):
 def test_community_modularity_materializes_labels_once(spark, monkeypatch):
     """A LAZY labels input (an aggregate pipeline) is checkpointed once
     before the three scans; an ALREADY-materialized input (LogicalRDD /
-    cached leaf — e.g. what label_propagation returns, or a local
-    DataFrame) is NOT copied again (r12, advisor ask: no double
-    checkpoint, no avoidable job at plan-build time). Values identical
-    either way."""
+    cached / LocalRelation leaf, possibly under a column projection — e.g.
+    what label_propagation returns, or a local DataFrame) is NOT copied
+    again (no double checkpoint, no avoidable job at plan-build time).
+    Values identical either way."""
     calls = _counting(monkeypatch, "localCheckpoint")
     from pyspark.sql import functions as F
 
@@ -86,11 +86,24 @@ def test_community_modularity_materializes_labels_once(spark, monkeypatch):
     # materialized leaf (LogicalRDD): the checkpoint must be SKIPPED
     out = graph.community_modularity(edges, labels).collect()
     assert calls["n"] == 0
+    # a cached input under a column projection, and a VALUES table
+    # (LocalRelation leaf): both materialized, so no checkpoint either
+    cached = labels.cache()
+    out_cached = graph.community_modularity(
+        edges, cached.select("label", "node")
+    ).collect()
+    values = spark.sql(
+        "SELECT * FROM VALUES (1L, 10L), (2L, 10L), (3L, 10L), (4L, 40L), "
+        "(5L, 40L) AS t(node, label)"
+    )
+    out_values = graph.community_modularity(edges, values).collect()
+    assert calls["n"] == 0
+    cached.unpersist()
     # lazy upstream pipeline (an aggregate): the checkpoint must fire
     lazy_labels = labels.groupBy("node").agg(F.min("label").alias("label"))
     out_lazy = graph.community_modularity(edges, lazy_labels).collect()
     assert calls["n"] >= 1
-    for res in (out, out_lazy):
+    for res in (out, out_cached, out_values, out_lazy):
         by = {r["label"]: r for r in res}
         assert by[10]["e_internal"] == 3 and by[10]["d_total"] == 6
         assert by[40]["e_internal"] == 1 and by[40]["d_total"] == 2

@@ -12,7 +12,11 @@ import pytest
 from samza_spark.operators import MessageStream, Windows
 from samza_spark.operators.windows import AccumulationMode, Triggers, WindowType
 from samza_spark.sources import FileSource, MemorySink
-from samza_spark.streaming.stateful import AggSpec, await_condition
+from samza_spark.streaming.stateful import (
+    AggSpec,
+    await_condition,
+    triggered_window_batch,
+)
 
 
 def ts(minute, second=0):
@@ -31,20 +35,36 @@ def two_batch_dir(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_streaming_count_trigger_across_batches(spark, two_batch_dir):
+@pytest.mark.parametrize(
+    "window, mode, expected",
+    [
+        ("tumbling", AccumulationMode.DISCARDING, [(0, 3), (1, 3)]),
+        ("tumbling", AccumulationMode.ACCUMULATING, [(0, 3), (1, 6)]),
+        ("session", AccumulationMode.DISCARDING, [(0, 3), (1, 3)]),
+        ("session", AccumulationMode.ACCUMULATING, [(0, 3), (1, 6)]),
+    ],
+    ids=["tumbling-DISCARDING", "tumbling-ACCUMULATING",
+         "session-DISCARDING", "session-ACCUMULATING"],
+)
+def test_streaming_count_trigger_across_batches(
+    spark, two_batch_dir, window, mode, expected
+):
+    """count(3) fires at exactly every 3rd message across micro-batches:
+    batch 1 (4 rows) fires pane 0 at its 3rd row and carries 1 row over;
+    batch 2 (3 rows) fires pane 1 at its 2nd row. The stream's count panes
+    equal the batch replay's non-final panes over the same 7 rows."""
+    if window == "tumbling":
+        spec = Windows.keyed_tumbling_window("k", "t", "1 hour")
+    else:
+        spec = Windows.keyed_session_window("k", "t", "5 minutes")
+    spec = spec.set_early_trigger(Triggers.count(3)).set_accumulation_mode(mode)
     src = FileSource(
         f"{two_batch_dir}/*",
         schema="k string, t timestamp",
         max_files_per_trigger=1,
     )
-    stream = src.read_stream(spark)
-    spec = (
-        Windows.keyed_tumbling_window("k", "t", "1 hour")
-        .set_early_trigger(Triggers.count(3))
-        .set_accumulation_mode(AccumulationMode.DISCARDING)
-    )
-    out = stream.window(spec, AggSpec("n", "count"))
-    sink = MemorySink("trig_out", output_mode="append")
+    out = src.read_stream(spark).window(spec, AggSpec("n", "count"))
+    sink = MemorySink(f"trig_out_{window}_{mode.value}", output_mode="append")
     q = out.send_to(sink)
     # processAllAvailable hangs for ProcessingTimeTimeout queries (timer
     # batches run forever) — poll the sink for the expected panes instead.
@@ -53,20 +73,28 @@ def test_streaming_count_trigger_across_batches(spark, two_batch_dir):
     q.awaitTermination(30)
     assert ok, f"expected 2 panes, got {sink.collect(spark)}"
     rows = sorted(sink.collect(spark), key=lambda r: r.pane_seq)
-    # micro-batch granularity: batch1 (4 rows) fires one count(3) pane of 4,
-    # DISCARDING clears it; batch2 (3 rows) fires a pane of 3 with state
-    # carried across batches (seq increments)
-    assert [(r.pane_seq, r.n, r.is_final) for r in rows] == [(0, 4, False), (1, 3, False)]
-    assert all(r.fire_reason == "count(3)" for r in rows)
+    assert [(r.pane_seq, r.n) for r in rows] == expected
+    assert all(r.fire_reason == "count(3)" and not r.is_final for r in rows)
     assert all(r.k == "a" for r in rows)
+
+    # window_end is left out: a stream's early session pane carries the
+    # session's end as seen so far, the batch replay's its final end
+    def panes(rs):
+        return [(r.window_start, r.pane_seq, r.n, r.fire_reason) for r in rs]
+
+    batch = triggered_window_batch(
+        spark.read.parquet(f"{two_batch_dir}/*"), spec, [AggSpec("n", "count")]
+    ).collect()
+    batch_early = sorted((r for r in batch if not r.is_final), key=lambda r: r.pane_seq)
+    assert panes(rows) == panes(batch_early)
 
 
 def test_streaming_session_windows_merge_across_batches(spark, two_batch_dir):
     """Triggered SESSION windows on a stream: batch 1 (4 rows at 10:00:00-03)
     and batch 2 (3 rows at 10:01:00-02) fall within one 5-minute gap, so the
     open session merges across micro-batches; count(5) fires an early pane
-    once the merged session holds 7 rows; the gap timer closes it with the
-    full session bounds."""
+    at the merged session's 5th message (batch 2's first row), with the
+    bounds the merge gave the session."""
     src = FileSource(
         f"{two_batch_dir}/*",
         schema="k string, t timestamp",
@@ -80,7 +108,7 @@ def test_streaming_session_windows_merge_across_batches(spark, two_batch_dir):
     out = src.read_stream(spark).window(spec, AggSpec("n", "count"))
     sink = MemorySink("sess_stream_out", output_mode="append")
     q = out.send_to(sink)
-    # batch1: 4 rows (< 5, no fire); batch2 merges -> 7 rows >= 5 -> pane
+    # batch1: 4 rows (< 5, no fire); batch2 merges and its 1st row -> pane
     ok = await_condition(
         q, lambda: any(r.fire_reason.startswith("count") for r in sink.collect(spark)),
         timeout_s=90,
@@ -89,7 +117,7 @@ def test_streaming_session_windows_merge_across_batches(spark, two_batch_dir):
     q.awaitTermination(30)
     assert ok, f"no count pane in {sink.collect(spark)}"
     pane = [r for r in sink.collect(spark) if r.fire_reason.startswith("count")][0]
-    assert pane.n == 7 and pane.k == "a" and not pane.is_final
+    assert pane.n == 5 and pane.k == "a" and not pane.is_final
     # merged session bounds: start 10:00:00, end = last event 10:01:02 + gap
     assert pane.window_start == ts(0, 0)
     assert pane.window_end == ts(6, 2)
